@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main — driver contract: ONE JSON line on stdout with
   * per-query wall seconds at SPARK_GRAFT_SF_DIR.
@@ -14,32 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // probed-partition serving (px62/px63/px64): with the default
-      // reuseBroadcastOnly=true the planner degrades the cells scan's
-      // dynamicpruning filters to literal TRUE when it cannot reuse the
-      // probe-side broadcast (measured: 484/484 files read at batch=1);
-      // standalone DPP subqueries re-run only the tiny probes plan and
-      // cut the scan to the probed cells (measured: 8/484 files)
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-        "false")
-      // top-k serving (r18): per-query ranking is a bounded
-      // TypedImperativeAggregate (ObjectHashAggregateExec). The default
-      // 128-distinct-keys sort-fallback is calibrated for unbounded
-      // sketch buffers; TopKEntries buffers are ≤ k·33 B, so hash-agg a
-      // ≤ 1M-query batch per task (≤ ~400 MB at serving k ≤ 10) before
-      // falling back. Scale-independent: bounds memory by BATCH size,
-      // not corpus size.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores(32)
+    val spark = GraftSession.local(cpus)
 
     def run(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -93,7 +69,7 @@ object Bench {
     // a read-only cwd must not fail the bench itself.
     try {
       val detail = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json"))
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", s"bench_detail_c$cpus.json"))
       val tmp = detail.resolveSibling(detail.getFileName.toString + ".tmp")
       java.nio.file.Files.writeString(tmp, fullLine + "\n")
       java.nio.file.Files.move(tmp, detail,
@@ -129,6 +105,13 @@ object Bench {
         println(s"""{"metric":"per_query","part":${i + 1},"parts":${chunks.length},"queries":{${c.mkString(",")}}}""")
       }
     }
+    // The per-query times once more as bare values in sorted-name order
+    // (the order of the full line's queries map): ~750 B for 118 queries,
+    // so it and the compact trailer fit a ~2,000-character stdout tail
+    // even when the chunked lines above do not.
+    println(results.map(r => fmt(r._2)).mkString(
+      s"""{"metric":"per_query_values","order":"name","n":${results.length},"values":[""",
+      ",", "]}"))
     // tail-truncation insurance: the full line above exceeds the driver's
     // ~4 KB tail window once per-query maps grow, and round 6 lost its
     // headline number exactly that way ("parsed": null). This compact

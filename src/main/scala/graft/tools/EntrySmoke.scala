@@ -1,11 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val n = graft.SparkEntry.entry(spark).count()
     println(s"ENTRY rows=$n")
     spark.stop()

@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.graph.GraphQueries.{GeoModel, GeoRoot, GeoV, RegionV}
 import graft.store.GraphStore
 
@@ -28,14 +27,7 @@ object InsertBench {
   def main(args: Array[String]): Unit = {
     val ns = args.headOption.getOrElse("1000,21000,1000000")
       .split(",").toSeq.map(_.trim.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores(32))
     import spark.implicits._
 
     def fmt(v: Double): String =

@@ -17,6 +17,13 @@ object GraftShim {
   def sessionUUID(s: SparkSession): String =
     s.asInstanceOf[classic.SparkSession].sessionUUID
 
+  /** Blocks until every queued listener event is delivered, so a job or
+    * stage listener has seen the end of everything already run
+    * (`SparkContext.listenerBus` is `private[spark]`).
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Spark's standard WRONG_NUM_ARGS analysis error — the builder-side
     * arity refusal (`QueryCompilationErrors` is `private[sql]`).
     */

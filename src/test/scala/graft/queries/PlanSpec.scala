@@ -237,6 +237,17 @@ class PlanSpec extends AnyFunSuite {
       s"documents must be scanned at most twice:\n$p")
   }
 
+  test("px64 batch serve: no dynamicpruning subquery at the factory config") {
+    // the cells-side join key mixes the cell columns with `nbr & 0`, a
+    // non-partition reference Catalyst does not fold, so the
+    // PartitionPruning rule plans no DPP subquery (r19: each one re-ran
+    // the whole-batch probes plan to prune nothing). A Spark upgrade that
+    // folds `nbr & 0` away would bring the subqueries back.
+    val p = plan("px64_sim_batch_serve")
+    assert("dynamicpruning".r.findAllIn(p).isEmpty,
+      s"px64 must plan no dynamic-pruning subqueries:\n$p")
+  }
+
   test("px29 composition: decontaminated corpus is lineage-cut, not recomputed") {
     val p = plan("px29_composed")
     // the thrice-consumed decontamination subplan must appear as ONE
